@@ -10,9 +10,13 @@ Scale design (100 TB / 10^10-URL frontier):
 - The only shuffles per round are (a) the per-host top-k window (two-phase,
   salted — hot hosts can't pin a partition), (b) the fetch join on url,
   and (c) the anti-join against `seen`. (b)+(c) are equi-joins AQE can
-  re-plan; the `seen` anti-join is additionally cut by a runtime bloom
-  filter (session.py enables spark.sql.optimizer.runtime.bloomFilter) and
-  by the explicit partitioned bloom sidecar (bloom.py).
+  re-plan; the `seen` anti-join can additionally be cut by the explicit
+  partitioned bloom sidecar (bloom.py). Spark's runtime bloom filter
+  (enabled in session.py) does not act on it: the executed anti-join plan
+  carries no might_contain.
+- Under the default broadcast fetch plan, the bounded batch is also the
+  broadcast side when it is subtracted from the frontier and the host
+  state, so the frontier and hosts tables never shuffle to lose a batch.
 - Dedupe identity is the exact URL string — hashes are only order keys —
   so collisions can never corrupt the seen-set.
 - State tables are re-derived per round and checkpointed (store.py round
@@ -291,8 +295,14 @@ def run_round(
     )
 
     # 7. frontier' = (frontier - batch) ∪ new ∪ requeues ; seen' ∪= new
+    # Under "broadcast" the batch is already known to fit a broadcast, so
+    # it is the build side here too and the frontier streams map-side;
+    # otherwise the planner chooses (the batch may outgrow broadcast).
+    def bounded(df: DataFrame) -> DataFrame:
+        return F.broadcast(df) if fetch_plan == "broadcast" else df
+
     frontier_next = (
-        state.frontier.join(batch.select("url"), "url", "left_anti")
+        state.frontier.join(bounded(batch.select("url")), "url", "left_anti")
         .select(*FRONTIER_COLS)
         .unionByName(new_rows.select(*FRONTIER_COLS))
         .unionByName(requeue.select(*FRONTIER_COLS))
@@ -304,7 +314,8 @@ def run_round(
             "host_id", F.lit(round_no).cast("int").alias("last_fetch_round")
         )
         hosts_next = (
-            state.hosts.join(fetched_hosts.select("host_id"), "host_id", "left_anti")
+            state.hosts.join(bounded(fetched_hosts.select("host_id")),
+                             "host_id", "left_anti")
             .unionByName(fetched_hosts)
         )
 

@@ -221,22 +221,26 @@ def update_head(
     cap, and rebuild every host named by the starvation guard."""
     cap = head_factor * k_per_host
 
-    # eager (<= cap x hosts rows — head-sized): kept feeds three
-    # consumers (host watermarks, the vanished-host probe, the merge);
-    # without materialization each recomputes the anti-joins.
+    # eager (<= cap x hosts rows — head-sized): kept feeds two consumers
+    # (host watermarks, the merge); without materialization each
+    # recomputes the anti-joins. The batch was cut from this head, so it
+    # is the smaller side: broadcast it and the head never shuffles.
     kept = (
         head.join(F.broadcast(fallback_hosts), "host_id", "left_anti")
-        .join(batch.select("url"), "url", "left_anti")
+        .join(F.broadcast(batch.select("url")), "url", "left_anti")
     ).localCheckpoint(eager=True)
-    kept_hosts = kept.select("host_id").distinct()
+    host_wm = kept.groupBy("host_id").agg(F.first("_wm").alias("_host_wm"))
     batch_hosts = batch.select("host_id").distinct()
     # batch hosts whose head emptied: their watermark state died with
     # the rows — rebuild (a complete host that emptied rebuilds to an
     # empty/complete head from its now-empty frontier slice: harmless)
-    vanished = batch_hosts.join(kept_hosts, "host_id", "left_anti")
-    rebuild1 = fallback_hosts.unionByName(vanished).distinct()
+    vanished = batch_hosts.join(host_wm.select("host_id"), "host_id",
+                                "left_anti")
+    # eager (<= hosts rows): read by the insert filter and the rebuild
+    # set, which would otherwise each re-run its distinct/anti-join
+    rebuild1 = (fallback_hosts.unionByName(vanished).distinct()
+                .localCheckpoint(eager=True))
 
-    host_wm = kept.groupBy("host_id").agg(F.first("_wm").alias("_host_wm"))
     ins = (
         inserts.select(*FRONTIER_COLS)
         .join(F.broadcast(rebuild1), "host_id", "left_anti")

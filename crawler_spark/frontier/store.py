@@ -28,7 +28,7 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from .engine import (
@@ -256,29 +256,7 @@ def run_crawl_checkpointed(
                                  cooldown_rounds=cooldown_rounds,
                                  fetch_plan=fetch_plan,
                                  precomputed_batch=batch_pre)
-        # per-partition lineage (F1/F5): rows per shuffle partition of the
-        # batch — the skew signal a 1000-executor operator would alarm on.
-        lineage = (
-            batch.groupBy(F.spark_partition_id().alias("pid"))
-            .count()
-            .agg(
-                F.count("*").alias("n_parts"),
-                F.max("count").alias("max_part_rows"),
-                F.sum("count").alias("n_batch"),
-            )
-        )
-        fetched = state.pages[-1]
-        metrics = lineage.crossJoin(
-            fetched.agg(F.count("*").alias("n_fetched"))
-        ).crossJoin(
-            # distinct-host cardinality per round (SURVEY §2.F note):
-            # approx_count_distinct is one pass, no shuffle of the batch
-            batch.agg(
-                F.approx_count_distinct("host_id").alias("n_hosts_approx"))
-        ).select(
-            F.lit(r).alias("round"), "n_batch", "n_fetched",
-            "n_parts", "max_part_rows", "n_hosts_approx",
-        )
+        metrics = _round_metrics(r, batch, state.pages[-1])
         pages_delta = state.pages[-1]
         if images is not None:
             # broadcast-inner on the bounded fetched side (an outer join
@@ -318,6 +296,39 @@ def run_crawl_checkpointed(
                 fb_hosts, k_per_host)
         store.commit(r, tables, extra={"k_per_host": k_per_host})
     return rounds
+
+
+def _round_metrics(r: int, batch: DataFrame, pages: DataFrame) -> DataFrame:
+    """The round's one-row ``metrics`` table: batch and fetched sizes, the
+    per-partition lineage (F1/F5: batch rows per partition — the skew
+    signal a 1000-executor operator would alarm on) and the approximate
+    distinct-host count (SURVEY §2.F note).
+
+    Both inputs are bounded by the batch, so they are tagged, unioned and
+    coalesced into ONE partition: the per-partition count (a window) and
+    the final aggregate then need no exchange, and writing the row is a
+    single job. The partition id is taken before the union, so it is the
+    batch's own partitioning. An empty batch yields zeros, not NULLs."""
+    rows = batch.select(
+        F.spark_partition_id().alias("pid"), "host_id",
+        F.lit(None).cast("int").alias("_page"),
+    ).unionByName(pages.select(
+        F.lit(None).cast("int").alias("pid"),
+        F.lit(None).cast("int").alias("host_id"),
+        F.lit(1).alias("_page"),
+    )).coalesce(1)
+    part_rows = F.when(F.col("pid").isNotNull(),
+                       F.count("*").over(W.partitionBy("pid")))
+    return rows.withColumn("_part_rows", part_rows).agg(
+        F.count("pid").alias("n_batch"),
+        F.count("_page").alias("n_fetched"),
+        F.countDistinct("pid").alias("n_parts"),
+        F.coalesce(F.max("_part_rows"), F.lit(0)).alias("max_part_rows"),
+        F.approx_count_distinct("host_id").alias("n_hosts_approx"),
+    ).select(
+        F.lit(r).alias("round"), "n_batch", "n_fetched",
+        "n_parts", "max_part_rows", "n_hosts_approx",
+    )
 
 
 def _bloom_for_round(store: RoundStore, state: CrawlState, r: int,
@@ -376,8 +387,6 @@ def pages_current(store: RoundStore, upto: int | None = None) -> DataFrame:
     append-only on disk (blind fast writes, full history for time travel
     / content-change diffing); upsert semantics are applied at read time —
     on Iceberg this view is what the MERGE materializes instead."""
-    from pyspark.sql import Window as W
-
     d = store.read_deltas("pages", upto=upto)
     # Tie-break beyond round: the scheduling batch is deduped per url, so
     # a url appears at most once per round by construction — but if that

@@ -367,16 +367,18 @@ def extract_sitemaps(
     Returns (host_col, sitemap_url), one row per extracted URL.  Pure
     native column algebra (split -> explode -> comment-strip -> anchored
     case-insensitive regexp), zero Python — scan-speed at 10^10 robots
-    bodies.  Discovered sitemap URLs union into the seed sources
-    (sources/seeds.py) as high-priority frontier entries — the standard
-    crawl bootstrap the reference lacks (robots_checker.py consumes only
-    the group rules).  Simplification shared with major crawlers: a
-    literal '#' inside the sitemap URL itself is treated as a comment
-    start (fragments are meaningless in sitemap URLs).
+    bodies.  Lines split on ``\\r?\\n``, so CRLF bodies (common on
+    Windows-hosted sites) leave no ``\\r`` on the extracted URL.
+    Discovered sitemap URLs union into the seed sources (sources/seeds.py)
+    as high-priority frontier entries — the standard crawl bootstrap the
+    reference lacks (robots_checker.py consumes only the group rules).
+    Simplification shared with major crawlers: a literal '#' inside the
+    sitemap URL itself is treated as a comment start (fragments are
+    meaningless in sitemap URLs).
     """
     lines = df.select(
         F.col(host_col),
-        F.explode(F.split(F.col(txt_col), "\n")).alias("_ln"),
+        F.explode(F.split(F.col(txt_col), r"\r?\n")).alias("_ln"),
     )
     stripped = F.split(F.col("_ln"), "#").getItem(0)
     url = F.regexp_extract(

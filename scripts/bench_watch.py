@@ -5,9 +5,9 @@ that are invisible to container loadavg. This watcher probes host
 capability (the same 1M-URL local[8] scheduling round BENCH.md's r04
 watcher used; healthy ~1.5 s) every ~10 minutes and, the first time the
 probe comes back healthy, runs `python bench.py` once and appends both
-readings to ``.bench_watch.jsonl`` so the round can record a
-steady-state suite number that measures the code instead of the
-neighbours.
+readings to ``.bench_watch/bench_watch.jsonl`` (gitignored) so the
+round can record a steady-state suite number that measures the code
+instead of the neighbours.
 
 Run: python scripts/bench_watch.py [max_iters] [healthy_s]
 """
@@ -23,7 +23,8 @@ import time
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
-LOG = os.path.join(ROOT, ".bench_watch.jsonl")
+LOG_DIR = os.path.join(ROOT, ".bench_watch")
+LOG = os.path.join(LOG_DIR, "bench_watch.jsonl")
 
 
 def probe() -> float:
@@ -63,6 +64,7 @@ def main() -> None:
                 text=True, timeout=900, cwd=ROOT,
             ).stdout.strip().splitlines()
             rec["bench"] = json.loads(bench[-1]) if bench else None
+        os.makedirs(LOG_DIR, exist_ok=True)
         with open(LOG, "a") as f:
             f.write(json.dumps(rec) + "\n")
         print(json.dumps(rec), flush=True)

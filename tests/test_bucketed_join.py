@@ -121,3 +121,59 @@ def test_run_round_bucketed_plan_equals_broadcast(spark, tables):
     assert "Bucketed: true" in plan
     assert "disabled by query planner" not in plan
     assert "SortMergeJoin" in plan
+
+
+def _nodes(plan):
+    """Every node of an executed physical plan, through AQE wrappers."""
+    todo = [plan]
+    while todo:
+        p = todo.pop()
+        name = p.nodeName()
+        if name == "AdaptiveSparkPlan":
+            todo.append(p.executedPlan())
+            continue
+        if name.endswith("QueryStage"):
+            todo.append(p.plan())
+            continue
+        yield p
+        todo.extend(p.children().apply(i) for i in range(p.children().size()))
+
+
+def test_frontier_minus_batch_broadcasts_only_under_broadcast_plan(
+        spark, tables):
+    """frontier' = frontier − batch: under fetch_plan='broadcast' the
+    bounded batch is the broadcast build side, so the frontier streams
+    with no Exchange; under 'bucketed' (the batch may outgrow broadcast)
+    the planner keeps its shuffled join. Size-based broadcasting is off,
+    as when the batch's size estimate exceeds the threshold: at test
+    scale the planner would otherwise broadcast the batch unasked."""
+    from crawler_spark.frontier.engine import CrawlState, enqueue, run_round
+
+    robots = synth.robots_dim(spark, N_HOSTS)
+    seeds = synth.seed_urls(spark, N_PAGES, 6, N_HOSTS)
+    first = enqueue(seeds.select("url").dropDuplicates(["url"]),
+                    seeds.select("url").limit(0), robots,
+                    disc_round=0).localCheckpoint(eager=True)
+
+    def frontier_anti_join(web, plan):
+        state = CrawlState(frontier=first, seen=first.select("url"))
+        st, _ = run_round(spark, state, web, robots, 1, 2,
+                          collect_metrics=False, fetch_plan=plan)
+        st.frontier.collect()  # the final adaptive plan is what ran
+        joins = [n for n in _nodes(st.frontier._jdf.queryExecution()
+                                   .executedPlan())
+                 if "Join" in n.nodeName()
+                 and n.joinType().toString() == "LeftAnti"]
+        assert len(joins) == 1
+        return joins[0]
+
+    with _no_broadcast(spark):
+        j = frontier_anti_join(tables["web"], "broadcast")
+        assert j.nodeName() == "BroadcastHashJoin"
+        assert j.buildSide().toString() == "BuildRight"
+        assert not [n for n in _nodes(j.left())
+                    if "Exchange" in n.nodeName()]
+
+        j = frontier_anti_join(spark.table("t_web_b"), "bucketed")
+        assert j.nodeName() == "SortMergeJoin"
+        assert [n for n in _nodes(j.left()) if "Exchange" in n.nodeName()]

@@ -381,3 +381,38 @@ def test_derived_table_manifest_semantics(spark, tmp_path):
     assert store.has_table("frontier_head", 0)
     store.commit(0, {"seen": df})              # non-base re-commit
     assert store.has_table("frontier_head", 0)
+
+
+def test_resumed_round_reuses_generated_code(spark, tmp_path):
+    """The generated-class cache holds a whole incremental round: resuming
+    the same committed round a second time in one session compiles no
+    new class (with the default 100 entries it recompiled ~200)."""
+    from crawler_spark.frontier.store import RoundStore, run_crawl_checkpointed
+
+    web = synth.web_graph(spark, 2000, 20)
+    robots = synth.robots_dim(spark, 20)
+    seeds = synth.seed_urls(spark, 2000, 6, 20)
+    snap = tmp_path / "r0"
+    run_crawl_checkpointed(RoundStore(spark, str(snap)), web, robots,
+                           rounds=0, k_per_host=K, seeds=seeds,
+                           frontier_mode="incremental")
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source \
+        .CodegenMetrics
+
+    def resume(name):
+        live = tmp_path / name
+        shutil.copytree(snap, live)
+        before = metrics.METRIC_COMPILATION_TIME().getCount()
+        run_crawl_checkpointed(RoundStore(spark, str(live)), web, robots,
+                               rounds=1, k_per_host=K,
+                               frontier_mode="incremental")
+        return metrics.METRIC_COMPILATION_TIME().getCount() - before
+
+    # the counter is live: a literal no earlier plan used forces a class
+    import random
+    before = metrics.METRIC_COMPILATION_TIME().getCount()
+    spark.range(3).where(F.col("id") != random.getrandbits(60)).collect()
+    assert metrics.METRIC_COMPILATION_TIME().getCount() > before
+
+    resume("first")  # may hit classes an earlier test compiled
+    assert resume("second") == 0

@@ -51,6 +51,34 @@ def test_resume_equals_uninterrupted(spark, tmp_path):
     assert all(r["max_part_rows"] is not None for r in m if r["round"] > 0)
 
 
+def test_exhausted_frontier_commits_zero_metrics(spark, tmp_path):
+    """Seeds absent from the web all go to the DLQ in round 1, so round 2
+    schedules from an empty frontier. Its metrics row must read 0, not
+    the NULLs an aggregate over zero partition groups yields."""
+    from pyspark.sql import functions as F
+
+    from crawler_spark.frontier import spec
+
+    web = synth.web_graph(spark, N_PAGES, N_HOSTS)
+    robots = synth.robots_dim(spark, N_HOSTS)
+    p = F.lit(N_PAGES * 10) + F.col("id") * 10  # listing ids past the web
+    seeds = spark.range(N_SEEDS).select(
+        spec.url_of(p, spec.host_id_of_page(p, N_HOSTS), F.lit(True))
+        .alias("url"))
+    st = RoundStore(spark, str(tmp_path / "dead"))
+    # a budget above every seed count, even at crawl_delay 4
+    run_crawl_checkpointed(st, web, robots, 2, 4 * N_SEEDS, seeds=seeds)
+
+    assert st.read("frontier", 1).count() == 0
+    m = {r["round"]: r.asDict() for r in st.read_deltas("metrics").collect()}
+    n_dead = st.read("dlq", 1).count()
+    assert n_dead > 0
+    assert m[1]["n_batch"] == n_dead and m[1]["n_fetched"] == 0
+    assert m[1]["n_parts"] >= 1 and m[1]["max_part_rows"] >= 1
+    assert m[2] == {"round": 2, "n_batch": 0, "n_fetched": 0, "n_parts": 0,
+                    "max_part_rows": 0, "n_hosts_approx": 0}
+
+
 def test_time_travel_view(spark, tmp_path):
     web = synth.web_graph(spark, N_PAGES, N_HOSTS)
     robots = synth.robots_dim(spark, N_HOSTS)
